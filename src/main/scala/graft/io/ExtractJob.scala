@@ -181,11 +181,9 @@ object ExtractJob {
     val t0 = System.nanoTime()
 
     // job labels (optimization guide §1): every job this protocol fires is
-    // attributable in the UI / listener probes as "<runId>:<phase>"
-    def labeled[A](phase: String)(body: => A): A = {
-      spark.sparkContext.setJobDescription(s"$runId:$phase")
-      try body finally spark.sparkContext.setJobDescription(null)
-    }
+    // attributable in the UI / listeners as "<runId>:<phase>"
+    def labeled[A](phase: String)(body: => A): A =
+      graft.util.JobLabel.labeled(spark.sparkContext, s"$runId:$phase")(body)
 
     units.zipWithIndex.takeWhile(_._2 < failAfterGroups).foreach { case (unit, _) =>
       // a unit spanning every bucket (fresh single-unit run) needs no

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema._
 import graft.corpus.DocGen
@@ -41,28 +41,32 @@ object Extract {
   }
 
   /** Salted repartition on size buckets: span count proxies page count
-    * (the skew axis — 5% of docs have 13-64 pages). The salt space must be
-    * FINE-GRAINED (~64 salts per partition per bucket): with only a few
-    * (bucket, salt) combos per partition, combo-level hash clumping
-    * re-creates the very imbalance salting is meant to remove (measured:
-    * 2.1x max/mean pages at 6 combos/partition vs 1.1x at 192/partition —
-    * graft.tools.SkewProbe). Monster-doc buckets get a 4x-wider space so
-    * several monsters can never share a (bucket, salt) cell. */
+    * (the skew axis — 5% of docs have 13-64 pages). */
   def saltRepartition(docs: Dataset[DocRow], partitions: Int): Dataset[DocRow] = {
     import docs.sparkSession.implicits._
-    docs
-      .withColumn("size_bucket",
-        when(size(col("spans")) <= 32, lit(0))
-          .when(size(col("spans")) <= 128, lit(1))
-          .otherwise(lit(2)))
+    saltBySize(docs.toDF(),
+      when(size(col("spans")) <= 32, lit(0))
+        .when(size(col("spans")) <= 128, lit(1))
+        .otherwise(lit(2)),
+      partitions)
+      .select(col("doc_id"), col("spans"))
+      .as[DocRow]
+  }
+
+  /** Repartition on (`bucket`, salt) with bucket 2 the monster docs. The
+    * salt space must be FINE-GRAINED (~64 salts per partition per bucket):
+    * with only a few (bucket, salt) combos per partition, combo-level hash
+    * clumping re-creates the very imbalance salting is meant to remove
+    * (measured: 2.1x max/mean pages at 6 combos/partition vs 1.1x at
+    * 192/partition). Monster-doc buckets get a 4x-wider space so several
+    * monsters can never share a (bucket, salt) cell. */
+  private def saltBySize(df: DataFrame, bucket: Column, partitions: Int): DataFrame =
+    df.withColumn("size_bucket", bucket)
       .withColumn("salt",
         pmod(xxhash64(col("doc_id")),
           when(col("size_bucket") === 2, lit(partitions * 256))
             .otherwise(lit(partitions * 64))))
       .repartition(partitions, col("size_bucket"), col("salt"))
-      .select(col("doc_id"), col("spans"))
-      .as[DocRow]
-  }
 
   /** The extraction job. `model` defaults to the deterministic stub; a real
     * deployment swaps in an ONNX-backed DocModel with the same contract.
@@ -82,27 +86,6 @@ object Extract {
     }
   }
 
-  /** Page-parallel variant for monster documents: explode to one row per
-    * page after the kernel, process pages independently, regroup per doc
-    * for the ordered folds. Costs a second shuffle (pages) — only worth it
-    * when single documents exceed task granularity (hundreds of pages);
-    * `run` keeps docs whole and is the default. */
-  def runPaged(docs: Dataset[DocRow], partitions: Int = 32,
-      model: DocModel = StubModel): Dataset[DocResult] = {
-    import docs.sparkSession.implicits._
-    saltRepartition(docs, partitions)
-      .mapPartitions { it =>
-        val m = model
-        it.flatMap(d => m.analyze(d))
-      }
-      .map(pm => (pm.doc_id, pm.page_idx, PageOps.process(pm)))
-      .groupByKey(_._1)
-      .mapGroups { (id, it) =>
-        val pages = it.toVector.sortBy(_._2).map(_._3)
-        Assemble.assemble(id, pages)
-      }
-  }
-
   /** Generation-fused variant: salt-repartition the doc_id STREAM (the size
     * bucket is derivable from the id), then generate + extract inside one
     * mapPartitions. The only shuffle moves bare id strings — the pattern a
@@ -111,18 +94,10 @@ object Extract {
   def runFromIds(ids: Dataset[String], partitions: Int = 32,
       model: DocModel = StubModel): Dataset[DocResult] = {
     import ids.sparkSession.implicits._
-    ids
-      .map(id => (id, DocGen.pageCount(id)))
-      .toDF("doc_id", "pages")
-      .withColumn("size_bucket",
-        when(col("pages") <= 3, lit(0)).when(col("pages") <= 12, lit(1)).otherwise(lit(2)))
-      .withColumn("salt",
-        // fine-grained salt space, same moduli as saltRepartition: few
-        // (bucket,salt) combos per partition re-create imbalance via combo
-        // clumping (SkewProbe: 2.1x max/mean at ~6 combos vs 1.1x at 192)
-        pmod(xxhash64(col("doc_id")),
-          when(col("size_bucket") === 2, lit(partitions * 256)).otherwise(lit(partitions * 64))))
-      .repartition(partitions, col("size_bucket"), col("salt"))
+    val pages = ids.map(id => (id, DocGen.pageCount(id))).toDF("doc_id", "pages")
+    saltBySize(pages,
+      when(col("pages") <= 3, lit(0)).when(col("pages") <= 12, lit(1)).otherwise(lit(2)),
+      partitions)
       .select(col("doc_id")).as[String]
       .mapPartitions { it =>
         val m = model

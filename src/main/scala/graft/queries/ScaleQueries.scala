@@ -86,7 +86,7 @@ object ScaleQueries {
     * withColumn first made the optimizer substitute the whole interpreted
     * higher-order `transform(...)` into the Generate's inferred
     * size/notnull filter, evaluating it ~3x per row — measured 2.8s vs
-    * 0.6s for the whole stage at sf0.1 (graft.tools.ShingleProf2). */
+    * 0.6s for the whole stage at sf0.1. */
   def shinglesFrom(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
@@ -340,10 +340,11 @@ object ScaleQueries {
         .select(col("v"),
           least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"),
           col("lbl").as("prev"))
-      spark.sparkContext.setJobDescription(s"labelprop:round$iter")
-      val next = if (reliable) next0.checkpoint() else next0.localCheckpoint(true)
-      changed = next.filter(col("lbl") =!= col("prev")).count()
-      spark.sparkContext.setJobDescription(null)
+      val next = graft.util.JobLabel.labeled(spark.sparkContext, s"labelprop:round$iter") {
+        val n = if (reliable) next0.checkpoint() else next0.localCheckpoint(true)
+        changed = n.filter(col("lbl") =!= col("prev")).count()
+        n
+      }
       labels.unpersist()
       labels = next.select(col("v"), col("lbl"))
       iter += 1

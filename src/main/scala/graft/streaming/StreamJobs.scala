@@ -44,17 +44,7 @@ object StreamJobs {
     * replayable source/sink. */
   def htmlStream(spark: SparkSession, landingDir: String): Dataset[DocResult] = {
     import spark.implicits._
-    spark.readStream
-      .format("binaryFile")
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .option("pathGlobFilter", "*.html")
-      .load(landingDir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
+    landed(spark, landingDir, Some("*.html"))
       .mapPartitions { it =>
         it.map { case (path, bytes) =>
           val id = path.substring(path.lastIndexOf('/') + 1).stripSuffix(".html")
@@ -63,11 +53,6 @@ object StreamJobs {
       }
   }
 
-  /** Continuous OFFICE ingestion over a binary landing directory: newly
-    * landed .docx/.xlsx/.pptx packages stream in via the binaryFile source
-    * and convert inside the partition (zip + DOM + rels — the same
-    * per-document function as the batch office_extract). Stateless,
-    * exactly-once with a replayable source/sink. */
   /** Continuous MIXED ingestion: any landed blob (.pdf/.ooxml/.html —
     * extension-agnostic) routes through the ONE shared magic-byte sniffer
     * the batch `runRaw` uses ([[graft.io.Sniff]]): %PDF → the byte-level
@@ -75,16 +60,7 @@ object StreamJobs {
     * of the crawl-store ingestion shape: one stream, every input tier. */
   def rawStream(spark: SparkSession, landingDir: String): Dataset[DocResult] = {
     import spark.implicits._
-    spark.readStream
-      .format("binaryFile")
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .load(landingDir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
+    landed(spark, landingDir, None)
       .mapPartitions { it =>
         it.map { case (path, bytes) =>
           val base = path.substring(path.lastIndexOf('/') + 1)
@@ -102,25 +78,38 @@ object StreamJobs {
       }
   }
 
+  /** Continuous OFFICE ingestion over a binary landing directory: newly
+    * landed .docx/.xlsx/.pptx packages stream in via the binaryFile source
+    * and convert inside the partition (zip + DOM + rels — the same
+    * per-document function as the batch office_extract). Stateless,
+    * exactly-once with a replayable source/sink. */
   def officeStream(spark: SparkSession, landingDir: String): Dataset[DocResult] = {
     import spark.implicits._
-    spark.readStream
-      .format("binaryFile")
-      .schema(StructType(Seq( // the binaryFile source's fixed schema
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .option("pathGlobFilter", "*.ooxml")
-      .load(landingDir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
+    landed(spark, landingDir, Some("*.ooxml"))
       .mapPartitions { it =>
         it.map { case (path, bytes) =>
           val id = path.substring(path.lastIndexOf('/') + 1).stripSuffix(".ooxml")
           graft.office.OfficeConvert.convert(id, bytes)
         }
       }
+  }
+
+  /** (path, content) of the files landing in `landingDir`, read through
+    * the binaryFile source's fixed schema; `glob` narrows them by name. */
+  private def landed(spark: SparkSession, landingDir: String,
+      glob: Option[String]): Dataset[(String, Array[Byte])] = {
+    import spark.implicits._
+    val src = spark.readStream
+      .format("binaryFile")
+      .schema(StructType(Seq(
+        StructField("path", StringType),
+        StructField("modificationTime", TimestampType),
+        StructField("length", LongType),
+        StructField("content", BinaryType))))
+    glob.fold(src)(g => src.option("pathGlobFilter", g))
+      .load(landingDir)
+      .select(col("path"), col("content"))
+      .as[(String, Array[Byte])]
   }
 
   /** Stateful sessionization via flatMapGroupsWithState: per-user sessions

@@ -67,6 +67,37 @@ class ResumeSpec extends AnyFunSuite {
       s"layout metric rows missing: $m")
     assert(m("authored_away_pages") == 0.0 && m("unsolvable_pages") == 0.0,
       s"layout invariant violated: $m")
+    // ...and the channel is live: the corpus authors some nested-insert
+    // pages, so a dead accumulator cannot pass the zero checks above
+    assert(m.getOrElse("insert_pages", 0.0) > 0.0, s"no insert pages counted: $m")
+  }
+
+  test("a labelled commit nested in an outer labelled job hands the outer description back") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        labels.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = Files.createTempDirectory("graft_label").toString
+      graft.util.JobLabel.labeled(sc, "outer") {
+        ExtractJob.run(spark, Extract.corpus(Extract.idRange(spark, 20)), out,
+          buckets = 2, groups = 1, runId = "inner", partitions = 2)
+        assert(sc.getLocalProperty("spark.job.description") == "outer")
+        assert(spark.range(3).count() == 3) // the outer job's own later work
+      }
+      assert(sc.getLocalProperty("spark.job.description") == null)
+      eventually(timeout(30.seconds)) {
+        val seen = labels.asScala.toSet
+        assert(Set("inner:write", "inner:ckpt", "outer").subsetOf(seen), s"labels seen: $seen")
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   test("raw-blob ingestion (office + html + pdf + image + ole interleaved) under the same protocol") {

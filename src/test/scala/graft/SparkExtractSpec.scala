@@ -29,17 +29,6 @@ class SparkExtractSpec extends AnyFunSuite {
     }
   }
 
-  test("page-parallel path agrees with golden (monster-doc fan-out)") {
-    import spark.implicits._
-    val ids = Extract.idRange(spark, 64)
-    val got = Extract.runPaged(Extract.corpus(ids), partitions = 7)
-      .collect().map(r => r.doc_id -> r.spans).toMap
-    (0 until 64).foreach { i =>
-      val id = f"doc-$i%012d"
-      assert(got(id) == DocGen.golden(id).spans, s"paged mismatch for $id")
-    }
-  }
-
   test("the two locator queries agree on chunk boundaries (shared rule)") {
     // chunk_locate (Catalyst window) and chunk_locate_fuzzy (per-doc walk)
     // must chunk identically — the r4 review's drift risk, now one rule
